@@ -147,7 +147,8 @@ object ImageCurateCli {
     var splitSpec: Option[Seq[(String, Double)]] = None
     var decontam: Option[String] = None; var decontamRadius = 4
     var semantic: Option[String] = None
-    var semanticMin = 0.95; var semanticPlanes = 8; var semanticBands = 8
+    var semanticMin = 0.95; var semanticPlanes = 8
+    var semanticBands = graft.ops.Similarity.SemanticBands
     var i = 0
     def value(flag: String): String = {
       i += 1
@@ -190,6 +191,10 @@ object ImageCurateCli {
         case "--semantic-min" => semanticMin = num("--semantic-min", _.toDouble)
         case "--semantic-planes" =>
           semanticPlanes = num("--semantic-planes", _.toInt)
+          // signature bit p is 1L << p, which wraps past 63
+          if (semanticPlanes < 1 || semanticPlanes > 63)
+            throw CurateCli.CliUsageError(
+              s"--semantic-planes: must be in 1..63, got $semanticPlanes")
         case "--semantic-bands" =>
           semanticBands = num("--semantic-bands", _.toInt)
         case "--caption-cap" => captionCap = Some(num("--caption-cap", _.toInt))
@@ -357,20 +362,8 @@ object ImageCurateCli {
           }
         val cand =
           if (psnrDb <= 0) cand0.select("d1", "d2")
-          else {
-            val a = exact.select(col("__dsig").as("d1"), col("bytes").as("__ba"))
-            val b = exact.select(col("__dsig").as("d2"), col("bytes").as("__bb"))
-            val pv =
-              if (orientation) graft.functions.ImageFunctions
-                .image_psnr_oriented(col("__ba"), col("__bb"))
-              else graft.functions.ImageFunctions
-                .image_psnr(col("__ba"), col("__bb"))
-            cand0.join(a, Seq("d1")).join(b, Seq("d2"))
-              .withColumn("__p", pv)
-              // NaN (size mismatch) orders above every number — exclude
-              .filter(!isnan(col("__p")) && col("__p") >= psnrDb)
-              .select("d1", "d2")
-          }
+          else Multimodal.psnrVerified(cand0, exact.select(col("__dsig"), col("bytes")),
+            "__dsig", "bytes", psnrDb, orientation).select("d1", "d2")
         // cached: the candidate-join + components subtree feeds the audit
         // write, the keep join, and (with --caption-cap or --split)
         // further passes over kept0 — one execution of the slim
@@ -418,15 +411,19 @@ object ImageCurateCli {
           .groupBy("image_id").agg(max("image_emb").as("image_emb"))
         // cached: this slim (id, surrogate, embedding) relation appears in
         // the LSH signature build, both candidate re-attach joins, the
-        // components corpus AND the dims probe — one shuffle join, not 5
+        // components corpus AND the width check — one shuffle join, not 5
         val scored = kept0.select(col("image_id"))
           .withColumn("__sid", xxhash64(col("image_id")))
           .join(emb, Seq("image_id")).cache()
         semScored = Some(scored)
-        val dimsOpt = scored
-          .select(size(col("image_emb")).as("d")).filter(col("d") > 0)
-          .limit(1).collect().headOption.map(_.getInt(0))
-        dimsOpt match {
+        // every non-empty embedding must share ONE width: the hyperplanes
+        // are built for one width, and a vector of any other width would
+        // hash and verify as garbage instead of failing
+        val widths = scored.select(size(col("image_emb")).as("d")).filter(col("d") > 0)
+          .agg(sort_array(collect_set(col("d")))).head().getSeq[Int](0)
+        require(widths.length <= 1,
+          s"--semantic: embeddings mix widths ${widths.mkString(", ")}; expected one width")
+        widths.headOption match {
           case None =>
             // nothing scorable — still write the (empty) audit: a
             // governance consumer must be able to distinguish "stage ran,

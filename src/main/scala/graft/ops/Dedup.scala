@@ -82,16 +82,65 @@ object Dedup {
       sig.select(col(idCol), col(s"band$b").as("band"))).reduce(_ unionByName _)
   }
 
-  /** Shared skew guard of both minhash forms: buckets whose population
-    * exceeds the cap are dropped whole (one shared implementation so the
-    * incremental path can never diverge from the batch semantics). */
-  private def capBands(bands0: DataFrame, maxBandPopulation: Long): DataFrame =
-    if (maxBandPopulation == Long.MaxValue) bands0
+  /** Rows per key of a `(key…, id, …)` relation — the one population count
+    * behind the hot-key cap ([[dropHotKeys]]) and its audits ([[hotBands]],
+    * [[hotTokens]]). */
+  private def keyPopulation(rel: DataFrame, keys: Seq[String]): DataFrame =
+    rel.groupBy(keys.map(col): _*).agg(count(lit(1)).as("population"))
+
+  /** The hot-key cap of every candidate generator: a key shared by n rows
+    * emits n(n-1)/2 pairs, so one adversarial key (boilerplate that
+    * collapses many documents to one band, a stopword, a flat image's
+    * phash block) can emit more pairs than the rest of the corpus. Keys
+    * whose population exceeds the cap are dropped whole. */
+  private def dropHotKeys(rel: DataFrame, keys: Seq[String], maxKeyPopulation: Long): DataFrame =
+    if (maxKeyPopulation == Long.MaxValue) rel
     else {
-      val keep = bands0.groupBy("band").agg(count(lit(1)).as("__n"))
-        .filter(col("__n") <= maxBandPopulation).select("band")
-      bands0.join(keep, Seq("band")) // AQE broadcasts the small keep side
+      val keep = keyPopulation(rel, keys)
+        .filter(col("population") <= maxKeyPopulation).select(keys.map(col): _*)
+      rel.join(keep, keys) // AQE broadcasts the small keep side
     }
+
+  /** The candidate-pair core of every near-dup generator: the bucket join
+    * of a `(key…, id, payload…)` relation on its keys, after the hot-key
+    * cap ([[dropHotKeys]]). Emits exactly one row per (key, unordered
+    * pair) as `(d1, <p>1…, d2, <p>2…)` with `d1 < d2`, each side's
+    * `payload` column `p` carried as `p1` / `p2`; callers that meet a pair
+    * under several keys deduplicate it themselves.
+    *
+    * Without `delta` this is the self-join of `rel`. With `delta` (same
+    * columns, ids distinct from `rel`'s) only pairs touching the delta are
+    * emitted, joining the delta's keys against `rel ∪ delta` — cost ∝
+    * delta × key population, never corpus². The cap counts populations
+    * over the full relation, so the incremental answer equals the batch
+    * answer restricted to delta-touching pairs. A delta–delta pair meets
+    * once per orientation and is kept only as x < y.
+    *
+    * Ids-first: only keys, ids and the (slim) payload ride the bucket
+    * shuffle; wide columns re-attach to the much smaller candidate set. */
+  private[ops] def keyPairs(rel: DataFrame, keys: Seq[String], idCol: String,
+      payload: Seq[String] = Nil, delta: Option[DataFrame] = None,
+      maxKeyPopulation: Long = Long.MaxValue): DataFrame = {
+    val cols = ((keys :+ idCol) ++ payload).map(col)
+    val all = dropHotKeys(delta.fold(rel.select(cols: _*)) { d =>
+      rel.select(cols :+ lit(false).as("__delta"): _*)
+        .unionByName(d.select(cols :+ lit(true).as("__delta"): _*))
+    }, keys, maxKeyPopulation)
+    def side(r: DataFrame, s: Int, extra: Column*): DataFrame =
+      r.select(keys.map(col) ++ (col(idCol).as(s"d$s") +: payload.map(p => col(p).as(s"$p$s"))) ++
+        extra: _*)
+    val (x, y) = (col("d1"), col("d2"))
+    val pairs = delta match {
+      case None => side(all, 1).join(side(all, 2), keys).filter(x < y)
+      case Some(_) => // x ranges over the delta, y over everything
+        side(all.filter(col("__delta")), 1).join(side(all, 2, col("__delta")), keys)
+          .filter(when(col("__delta"), x < y).otherwise(x =!= y))
+    }
+    // orient every pair as d1 < d2, each payload travelling with its id
+    val swap = if (delta.isEmpty) lit(false) else x > y
+    pairs.select((for (s <- Seq(1, 2); n <- "d" +: payload)
+      yield when(swap, col(s"$n${3 - s}")).otherwise(col(s"$n$s")).as(s"$n$s")): _*)
+  }
 
   /** LSH candidate pairs: documents sharing any MinHash band bucket.
     * The join is per-bucket (shuffle on band), not all-pairs.
@@ -104,13 +153,10 @@ object Dedup {
     */
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
       perms: Seq[(Long, Long)] = DefaultPerms, p: Long = DefaultP,
-      maxBandPopulation: Long = Long.MaxValue): DataFrame = {
-    val bands = capBands(bandBuckets(df, idCol, textCol, perms, p), maxBandPopulation)
-    val l = bands.select(col("band"), col(idCol).as("d1"))
-    val r = bands.select(col("band"), col(idCol).as("d2"))
-    l.join(r, Seq("band")).filter(col("d1") < col("d2"))
-      .select("d1", "d2").distinct()
-  }
+      maxBandPopulation: Long = Long.MaxValue): DataFrame =
+    keyPairs(bandBuckets(df, idCol, textCol, perms, p), Seq("band"), idCol,
+      maxKeyPopulation = maxBandPopulation)
+      .distinct() // a pair may share several bands
 
   /** Incremental LSH candidates: the [[minhashCandidatePairs]] of
     * `corpus ∪ delta` that touch the delta, generated by joining only the
@@ -122,26 +168,18 @@ object Dedup {
   def minhashCandidatePairsIncremental(corpus: DataFrame, delta: DataFrame,
       idCol: String, textCol: String,
       perms: Seq[(Long, Long)] = DefaultPerms, p: Long = DefaultP,
-      maxBandPopulation: Long = Long.MaxValue): DataFrame = {
-    val bands = capBands(
-      bandBuckets(corpus, idCol, textCol, perms, p)
-        .unionByName(bandBuckets(delta, idCol, textCol, perms, p)),
-      maxBandPopulation)
-    val deltaIds = delta.select(col(idCol)).distinct()
-    val l = bands.join(deltaIds, Seq(idCol)).select(col("band"), col(idCol).as("x"))
-    val r = bands.select(col("band"), col(idCol).as("y"))
-    l.join(r, Seq("band")).filter(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("d1"), greatest(col("x"), col("y")).as("d2"))
-      .distinct()
-  }
+      maxBandPopulation: Long = Long.MaxValue): DataFrame =
+    keyPairs(bandBuckets(corpus, idCol, textCol, perms, p), Seq("band"), idCol,
+      delta = Some(bandBuckets(delta, idCol, textCol, perms, p)),
+      maxKeyPopulation = maxBandPopulation)
+      .distinct() // a pair may share several bands
 
   /** Audit relation for [[minhashCandidatePairs]]' cap: the over-populated
     * band buckets that were dropped, with their populations. */
   def hotBands(df: DataFrame, idCol: String, textCol: String,
       maxBandPopulation: Long,
       perms: Seq[(Long, Long)] = DefaultPerms, p: Long = DefaultP): DataFrame =
-    bandBuckets(df, idCol, textCol, perms, p)
-      .groupBy("band").agg(count(lit(1)).as("population"))
+    keyPopulation(bandBuckets(df, idCol, textCol, perms, p), Seq("band"))
       .filter(col("population") > maxBandPopulation)
 
   /** SimHash over distinct-token hash bits (default 16 bits). */
@@ -155,28 +193,32 @@ object Dedup {
     withSums.select(col(idCol), sig.as("simhash"))
   }
 
-  /** Shared pigeonhole-block construction + skew cap of both hamming
-    * forms: the signature splits into maxHamming+1 bit blocks, and block
-    * values shared by more than the cap are dropped whole (a block value
-    * shared by n documents emits O(n²) candidates). One implementation so
-    * the incremental path stays bit-identical to the batch semantics. */
+  /** Pigeonhole blocks of both hamming forms: the signature splits into
+    * maxHamming+1 bit blocks, one `(blk, bval, id, __sig)` row each. */
   private def sigBlocks(sig: DataFrame, idCol: String, sigCol: String,
-      maxHamming: Int, bits: Int, maxBlockPopulation: Long): DataFrame = {
+      maxHamming: Int, bits: Int): DataFrame = {
     val nBlocks = maxHamming + 1
     val bounds = (0 to nBlocks).map(i => i * bits / nBlocks)
-    val blocks0 = (0 until nBlocks).map { b =>
+    (0 until nBlocks).map { b =>
       val lo = bounds(b)
       val w = bounds(b + 1) - lo
       val mask = if (w >= 64) lit(-1L) else lit((1L << w) - 1)
       sig.select(col(idCol), col(sigCol).as("__sig"), lit(b).as("blk"),
         shiftright(col(sigCol), lo).bitwiseAND(mask).as("bval"))
     }.reduce(_ unionByName _)
-    if (maxBlockPopulation == Long.MaxValue) blocks0
-    else {
-      val keep = blocks0.groupBy("blk", "bval").agg(count(lit(1)).as("__n"))
-        .filter(col("__n") <= maxBlockPopulation).select("blk", "bval")
-      blocks0.join(keep, Seq("blk", "bval"))
-    }
+  }
+
+  /** Block-join candidates of both hamming forms, verified by exact
+    * popcount; a pair agreeing on several blocks is emitted once. */
+  private def hammingVerified(sig: DataFrame, deltaSig: Option[DataFrame],
+      idCol: String, sigCol: String, maxHamming: Int, bits: Int,
+      maxBlockPopulation: Long): DataFrame = {
+    def blocks(s: DataFrame) = sigBlocks(s, idCol, sigCol, maxHamming, bits)
+    keyPairs(blocks(sig), Seq("blk", "bval"), idCol, Seq("__sig"),
+        deltaSig.map(blocks), maxBlockPopulation)
+      .withColumn("hamming", bit_count(col("__sig1").bitwiseXOR(col("__sig2"))))
+      .filter(col("hamming") <= maxHamming)
+      .select("d1", "d2", "hamming").distinct()
   }
 
   /** Near-duplicate pairs of any int64 signature column within a hamming
@@ -186,19 +228,13 @@ object Dedup {
     * block value), never all-pairs, and are verified with an exact
     * popcount. The standard hamming-LSH construction for near-dup mining at
     * corpus scale; works over any precomputed signature (SimHash, image
-    * phash, fingerprints).
+    * phash, fingerprints). Block values shared by more than
+    * `maxBlockPopulation` rows are dropped whole ([[keyPairs]]' cap).
     */
   def hammingPairs(sig: DataFrame, idCol: String, sigCol: String,
       maxHamming: Int = 3, bits: Int = 64,
-      maxBlockPopulation: Long = Long.MaxValue): DataFrame = {
-    val blocks = sigBlocks(sig, idCol, sigCol, maxHamming, bits, maxBlockPopulation)
-    val l = blocks.select(col("blk"), col("bval"), col(idCol).as("d1"), col("__sig").as("s1"))
-    val r = blocks.select(col("blk"), col("bval"), col(idCol).as("d2"), col("__sig").as("s2"))
-    l.join(r, Seq("blk", "bval")).filter(col("d1") < col("d2"))
-      .withColumn("hamming", bit_count(col("s1").bitwiseXOR(col("s2"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("d1", "d2", "hamming").distinct()
-  }
+      maxBlockPopulation: Long = Long.MaxValue): DataFrame =
+    hammingVerified(sig, None, idCol, sigCol, maxHamming, bits, maxBlockPopulation)
 
   /** Incremental hamming near-dup pairs: the [[hammingPairs]] of
     * `corpusSig ∪ deltaSig` that touch the delta, generated by joining only
@@ -210,21 +246,9 @@ object Dedup {
     * inputs. */
   def hammingPairsIncremental(corpusSig: DataFrame, deltaSig: DataFrame,
       idCol: String, sigCol: String, maxHamming: Int = 3, bits: Int = 64,
-      maxBlockPopulation: Long = Long.MaxValue): DataFrame = {
-    val all = corpusSig.select(col(idCol), col(sigCol))
-      .unionByName(deltaSig.select(col(idCol), col(sigCol)))
-    val blocks = sigBlocks(all, idCol, sigCol, maxHamming, bits, maxBlockPopulation)
-    val deltaIds = deltaSig.select(col(idCol)).distinct()
-    val l = blocks.join(deltaIds, Seq(idCol))
-      .select(col("blk"), col("bval"), col(idCol).as("x"), col("__sig").as("s1"))
-    val r = blocks.select(col("blk"), col("bval"), col(idCol).as("y"), col("__sig").as("s2"))
-    l.join(r, Seq("blk", "bval")).filter(col("x") =!= col("y"))
-      .withColumn("hamming", bit_count(col("s1").bitwiseXOR(col("s2"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(least(col("x"), col("y")).as("d1"),
-        greatest(col("x"), col("y")).as("d2"), col("hamming"))
-      .distinct() // delta–delta pairs arrive in both orientations
-  }
+      maxBlockPopulation: Long = Long.MaxValue): DataFrame =
+    hammingVerified(corpusSig, Some(deltaSig), idCol, sigCol, maxHamming, bits,
+      maxBlockPopulation)
 
   /** SimHash near-duplicate pairs within a hamming radius — [[simhash]]
     * signatures fed through the generic [[hammingPairs]] pigeonhole join. */
@@ -233,17 +257,6 @@ object Dedup {
       maxBlockPopulation: Long = Long.MaxValue): DataFrame =
     hammingPairs(simhash(df, idCol, textCol, bits), idCol, "simhash",
       maxHamming, bits, maxBlockPopulation)
-
-  /** Shared stopword/skew cap of both jaccard forms: tokens with document
-    * frequency above the cap leave the universe BEFORE sizes are computed
-    * (one implementation so the incremental path can never diverge). */
-  private def capTokensByDf(toks0: DataFrame, maxDf: Long): DataFrame =
-    if (maxDf == Long.MaxValue) toks0
-    else {
-      val keep = toks0.groupBy("token").agg(count(lit(1)).as("__df"))
-        .filter(col("__df") <= maxDf).select("token")
-      toks0.join(keep, Seq("token")) // AQE broadcasts the small keep side
-    }
 
   /** Token-set Jaccard similarity for all pairs sharing ≥1 token; rounded to
     * 6 places. Candidate generation is by token co-occurrence (shuffle on
@@ -263,19 +276,8 @@ object Dedup {
     */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, maxDf: Long = Long.MaxValue, ngram: Int = 1): DataFrame = {
-    val toks = capTokensByDf(shingleTokens(df, idCol, textCol, ngram), maxDf)
-    val sizes = toks.groupBy(idCol).agg(count(lit(1)).as("sz"))
-    val l = toks.select(col("token"), col(idCol).as("d1"))
-    val r = toks.select(col("token"), col(idCol).as("d2"))
-    val inter = l.join(r, Seq("token")).filter(col("d1") < col("d2"))
-      .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col(idCol).as("d1"), col("sz").as("sz1")), Seq("d1"))
-      .join(sizes.select(col(idCol).as("d2"), col("sz").as("sz2")), Seq("d2"))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("sz1") + col("sz2") - col("inter")).cast("double"), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("d1", "d2", "jaccard")
+    val toks = dropHotKeys(shingleTokens(df, idCol, textCol, ngram), Seq("token"), maxDf)
+    jaccardScored(keyPairs(toks, Seq("token"), idCol), toks, idCol, threshold)
   }
 
   /** Incremental near-dup pairs: exactly the [[jaccardPairs]] of
@@ -285,27 +287,25 @@ object Dedup {
     * generation joins delta-side posting lists against the full relation
     * (cost ∝ |delta| × list length, not |corpus|²), while set sizes, the
     * document-frequency cap, and the Jaccard denominator are all computed
-    * over the FULL universe so scores equal the batch recompute bit-exactly
-    * (delta–delta pairs appear under both join orientations and are
-    * canonicalized before counting). Ids must be distinct across the two
-    * inputs. */
+    * over the FULL universe so scores equal the batch recompute bit-exactly.
+    * Ids must be distinct across the two inputs. */
   def jaccardPairsIncremental(corpus: DataFrame, delta: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       maxDf: Long = Long.MaxValue, ngram: Int = 1): DataFrame = {
-    val allToks = capTokensByDf(
-      shingleTokens(corpus, idCol, textCol, ngram)
-        .unionByName(shingleTokens(delta, idCol, textCol, ngram)), maxDf)
-    val deltaIds = delta.select(col(idCol)).distinct()
-    val deltaToks = allToks.join(deltaIds, Seq(idCol)) // capped delta side
-    val sizes = allToks.groupBy(idCol).agg(count(lit(1)).as("sz"))
-    val l = deltaToks.select(col("token"), col(idCol).as("x"))
-    val r = allToks.select(col("token"), col(idCol).as("y"))
-    val inter = l.join(r, Seq("token")).filter(col("x") =!= col("y"))
-      .select(col("token"), least(col("x"), col("y")).as("d1"),
-        greatest(col("x"), col("y")).as("d2"))
-      .distinct() // delta–delta pairs arrive in both orientations
-      .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
-    inter
+    val corpusToks = shingleTokens(corpus, idCol, textCol, ngram)
+    val deltaToks = shingleTokens(delta, idCol, textCol, ngram)
+    jaccardScored(
+      keyPairs(corpusToks, Seq("token"), idCol, delta = Some(deltaToks), maxKeyPopulation = maxDf),
+      dropHotKeys(corpusToks.unionByName(deltaToks), Seq("token"), maxDf), idCol, threshold)
+  }
+
+  /** Jaccard scores of both forms: shared-token counts of the `(d1, d2)`
+    * token-pair rows over the set sizes of the (capped) token universe
+    * `toks`, rounded to 6 places, at or above `threshold`. */
+  private def jaccardScored(tokenPairs: DataFrame, toks: DataFrame, idCol: String,
+      threshold: Double): DataFrame = {
+    val sizes = toks.groupBy(idCol).agg(count(lit(1)).as("sz"))
+    tokenPairs.groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
       .join(sizes.select(col(idCol).as("d1"), col("sz").as("sz1")), Seq("d1"))
       .join(sizes.select(col(idCol).as("d2"), col("sz").as("sz2")), Seq("d2"))
       .withColumn("jaccard", round(col("inter").cast("double") /
@@ -322,8 +322,8 @@ object Dedup {
     * vocabulary. */
   def hotTokens(df: DataFrame, idCol: String, textCol: String, maxDf: Long,
       ngram: Int = 1): DataFrame =
-    shingleTokens(df, idCol, textCol, ngram)
-      .groupBy("token").agg(count(lit(1)).as("doc_freq"))
+    keyPopulation(shingleTokens(df, idCol, textCol, ngram), Seq("token"))
+      .select(col("token"), col("population").as("doc_freq"))
       .filter(col("doc_freq") > maxDf)
 
   /** Connected components over an undirected pair relation — the stage that

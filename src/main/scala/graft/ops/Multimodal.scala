@@ -277,30 +277,9 @@ object Multimodal {
           .filter(bit_count(col("__da").bitwiseXOR(col("__db"))) <= dhashMaxHamming)
           .drop("__da", "__db")
       }
-    val a = images.select(col(idCol).as("d1"), col(bytesCol).as("__ba"))
-    val b = images.select(col(idCol).as("d2"), col(bytesCol).as("__bb"))
-    cand.join(a, Seq("d1")).join(b, Seq("d2"))
-      .withColumn("psnr_db",
-        graft.functions.ImageFunctions.image_psnr(col("__ba"), col("__bb")))
-      // Spark SQL orders NaN ABOVE every number, so `psnr_db >= min` alone
-      // would admit size-mismatched/undecodable pairs — exclude explicitly
-      .filter(!isnan(col("psnr_db")) && col("psnr_db") >= minPsnrDb)
-      .select("d1", "d2", "hamming", "psnr_db")
+    psnrVerified(cand, images, idCol, bytesCol, minPsnrDb, oriented = false)
   }
 
-  /** Incremental [[verifiedPhashDup]]: the verified pairs of
-    * `corpus ∪ delta` that TOUCH the delta (a new image batch against the
-    * standing snapshot table), candidate generation via
-    * [[graft.ops.Dedup.hammingPairsIncremental]] — cost ∝ delta × posting
-    * lists, never corpus². Delta phashes are computed here; the standing
-    * corpus should supply its stored `phash` column (`phashCol`) so the
-    * daily increment never re-decodes the corpus — corpus bytes are read
-    * only for the candidate pairs' PSNR checks. Equals the batch
-    * [[verifiedPhashDup]] restricted to delta-touching pairs (spec-pinned).
-    * Ids must be distinct across the inputs. A delta that ALREADY carries
-    * a phash column (the streaming curation path computed one via
-    * `image_sig`) passes its name as `deltaPhashCol` to skip the
-    * per-batch re-decode. */
   /** Orientation-dup pairs: the [[verifiedPhashDup]] construction with
     * the signature set replaced by ALL 8 dihedral orientation phashes
     * (`phash_orientations` — ONE decode per image) and the verifier by
@@ -340,25 +319,40 @@ object Multimodal {
     val cand = Dedup.hammingPairs(sig, idCol, "__oh", maxHamming,
         maxBlockPopulation = maxBlockPopulation)
       .groupBy("d1", "d2").agg(min(col("hamming")).as("hamming"))
-    val a = images.select(col(idCol).as("d1"), col(bytesCol).as("__ba"))
-    val b = images.select(col(idCol).as("d2"), col(bytesCol).as("__bb"))
-    cand.join(a, Seq("d1")).join(b, Seq("d2"))
-      .withColumn("psnr_db",
-        graft.functions.ImageFunctions.image_psnr_oriented(col("__ba"), col("__bb")))
-      // NaN sorts above every number in Spark SQL — exclude explicitly
-      .filter(!isnan(col("psnr_db")) && col("psnr_db") >= minPsnrDb)
-      .select("d1", "d2", "hamming", "psnr_db")
+    psnrVerified(cand, images, idCol, bytesCol, minPsnrDb, oriented = true)
   }
 
+  /** Incremental [[verifiedPhashDup]]: the verified pairs of
+    * `corpus ∪ delta` that TOUCH the delta (a new image batch against the
+    * standing snapshot table), candidate generation via
+    * [[graft.ops.Dedup.hammingPairsIncremental]] — cost ∝ delta × posting
+    * lists, never corpus². Delta phashes are computed here; the standing
+    * corpus should supply its stored `phash` column (`phashCol`) so the
+    * daily increment never re-decodes the corpus — corpus bytes are read
+    * only for the candidate pairs' PSNR checks. Equals the batch
+    * [[verifiedPhashDup]] restricted to delta-touching pairs (spec-pinned).
+    * Ids must be distinct across the inputs. A delta that ALREADY carries
+    * a phash column (the streaming curation path computed one via
+    * `image_sig`) passes its name as `deltaPhashCol` to skip the
+    * per-batch re-decode. */
   def verifiedPhashDupIncremental(corpus: DataFrame, delta: DataFrame,
       idCol: String, bytesCol: String, phashCol: String = "phash",
       maxHamming: Int = 6, minPsnrDb: Double = 40.0,
       maxBlockPopulation: Long = Long.MaxValue,
       deltaPhashCol: String = "",
-      materializeCandidates: Boolean = false): DataFrame =
-    verifiedDupIncrementalCore(corpus, delta, idCol, bytesCol, phashCol,
-      maxHamming, minPsnrDb, maxBlockPopulation, deltaPhashCol,
-      materializeCandidates)
+      materializeCandidates: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val corpusSig = corpus.select(col(idCol), col(phashCol).as("__ph"))
+    val deltaSig =
+      if (deltaPhashCol.nonEmpty) delta.select(col(idCol), col(deltaPhashCol).as("__ph"))
+      else delta.select(col(idCol),
+        graft.functions.ImageFunctions.phash64(col(bytesCol)).as("__ph"))
+    val cand = Dedup.hammingPairsIncremental(corpusSig, deltaSig, idCol, "__ph",
+      maxHamming, bits = 64, maxBlockPopulation = maxBlockPopulation)
+    psnrVerified(cand, corpus.select(col(idCol), col(bytesCol))
+        .unionByName(delta.select(col(idCol), col(bytesCol))),
+      idCol, bytesCol, minPsnrDb, oriented = false, materializeCandidates)
+  }
 
   /** [[verifiedOrientationDup]], incrementally: delta vs a standing corpus
     * whose 8-element ORIENTATION hash arrays are already stored
@@ -386,63 +380,50 @@ object Multimodal {
       else delta.select(col(idCol),
         explode(graft.functions.ImageFunctions.phash_orientations(col(bytesCol)))
           .as("__oh"))
-    val cand0 = Dedup.hammingPairsIncremental(corpusSig, deltaSig, idCol, "__oh",
+    val cand = Dedup.hammingPairsIncremental(corpusSig, deltaSig, idCol, "__oh",
         maxHamming, bits = 64, maxBlockPopulation = maxBlockPopulation)
       .groupBy("d1", "d2").agg(min(col("hamming")).as("hamming"))
-    val cand = if (materializeCandidates) cand0.localCheckpoint() else cand0
-    val bytesRel0 = corpus.select(col(idCol), col(bytesCol))
-      .unionByName(delta.select(col(idCol), col(bytesCol)))
-    val bytesRel = if (materializeCandidates) {
-      val candIds = cand.select(col("d1").as(idCol))
-        .unionByName(cand.select(col("d2").as(idCol))).distinct()
-      bytesRel0.join(candIds, Seq(idCol), "left_semi")
-    } else bytesRel0
-    val a = bytesRel.select(col(idCol).as("d1"), col(bytesCol).as("__ba"))
-    val b = bytesRel.select(col(idCol).as("d2"), col(bytesCol).as("__bb"))
-    cand.join(a, Seq("d1")).join(b, Seq("d2"))
-      .withColumn("psnr_db",
-        graft.functions.ImageFunctions.image_psnr_oriented(col("__ba"), col("__bb")))
-      .filter(!isnan(col("psnr_db")) && col("psnr_db") >= minPsnrDb)
-      .select("d1", "d2", "hamming", "psnr_db")
+    psnrVerified(cand, corpus.select(col(idCol), col(bytesCol))
+        .unionByName(delta.select(col(idCol), col(bytesCol))),
+      idCol, bytesCol, minPsnrDb, oriented = true, materializeCandidates)
   }
 
-  private def verifiedDupIncrementalCore(corpus: DataFrame, delta: DataFrame,
-      idCol: String, bytesCol: String, phashCol: String,
-      maxHamming: Int, minPsnrDb: Double,
-      maxBlockPopulation: Long,
-      deltaPhashCol: String,
-      materializeCandidates: Boolean): DataFrame = {
+  /** The PSNR verify of every pixel-checked near-dup generator: payload
+    * bytes re-attach by two id equi-joins to the `(d1, d2, …)` candidates
+    * — bytes never ride the candidate shuffle — and a pair survives at
+    * PSNR ≥ `minPsnrDb` (`oriented`: the max over the 8 dihedral
+    * orientations of the right image). Size-mismatched or undecodable
+    * pairs PSNR to NaN and drop: Spark SQL orders NaN ABOVE every number,
+    * so `psnr_db >= min` alone would admit them. Output: the candidate
+    * columns + `psnr_db`.
+    *
+    * `materializeCandidates` is the per-trigger (streaming sink) shape:
+    * the candidate relation is signature-space SMALL by construction
+    * (bounded by the planted-duplicate density × delta size, and capped by
+    * maxBlockPopulation), so an eager localCheckpoint lets the bytes
+    * attach semi-join-prune the payload scan to candidate ids — ONE pruned
+    * pass over the payload column instead of two full ones. The default
+    * (lazy) keeps the one-action batch plan: there the whole result is
+    * consumed once and Catalyst sees a single tree. */
+  private[graft] def psnrVerified(cand0: DataFrame, bytes0: DataFrame, idCol: String,
+      bytesCol: String, minPsnrDb: Double, oriented: Boolean,
+      materializeCandidates: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions._
-    val corpusSig = corpus.select(col(idCol), col(phashCol).as("__ph"))
-    val deltaSig =
-      if (deltaPhashCol.nonEmpty) delta.select(col(idCol), col(deltaPhashCol).as("__ph"))
-      else delta.select(col(idCol),
-        graft.functions.ImageFunctions.phash64(col(bytesCol)).as("__ph"))
-    val cand0 = Dedup.hammingPairsIncremental(corpusSig, deltaSig, idCol, "__ph",
-      maxHamming, bits = 64, maxBlockPopulation = maxBlockPopulation)
-    // `materializeCandidates` is the per-trigger (streaming sink) shape:
-    // the candidate relation is signature-space SMALL by construction
-    // (bounded by the planted-duplicate density × delta size, and capped
-    // by maxBlockPopulation), so an eager localCheckpoint lets the bytes
-    // attach below semi-join-prune the corpus scan to candidate ids —
-    // ONE pruned pass over the payload column instead of two full ones.
-    // The default (lazy) keeps the one-action batch-sweep plan: there the
-    // whole result is consumed once and Catalyst sees a single tree.
     val cand = if (materializeCandidates) cand0.localCheckpoint() else cand0
-    val bytesRel0 = corpus.select(col(idCol), col(bytesCol))
-      .unionByName(delta.select(col(idCol), col(bytesCol)))
-    val bytesRel = if (materializeCandidates) {
+    val bytes = if (!materializeCandidates) bytes0 else {
       val candIds = cand.select(col("d1").as(idCol))
         .unionByName(cand.select(col("d2").as(idCol))).distinct()
-      bytesRel0.join(candIds, Seq(idCol), "left_semi")
-    } else bytesRel0
-    val a = bytesRel.select(col(idCol).as("d1"), col(bytesCol).as("__ba"))
-    val b = bytesRel.select(col(idCol).as("d2"), col(bytesCol).as("__bb"))
+      bytes0.join(candIds, Seq(idCol), "left_semi")
+    }
+    val a = bytes.select(col(idCol).as("d1"), col(bytesCol).as("__ba"))
+    val b = bytes.select(col(idCol).as("d2"), col(bytesCol).as("__bb"))
+    val psnr =
+      if (oriented) graft.functions.ImageFunctions.image_psnr_oriented(col("__ba"), col("__bb"))
+      else graft.functions.ImageFunctions.image_psnr(col("__ba"), col("__bb"))
     cand.join(a, Seq("d1")).join(b, Seq("d2"))
-      .withColumn("psnr_db",
-        graft.functions.ImageFunctions.image_psnr(col("__ba"), col("__bb")))
+      .withColumn("psnr_db", psnr)
       .filter(!isnan(col("psnr_db")) && col("psnr_db") >= minPsnrDb)
-      .select("d1", "d2", "hamming", "psnr_db")
+      .select(cand.columns.map(col) :+ col("psnr_db"): _*)
   }
 
   /** Per-image quality stats — one decode + one histogram pass per row,

@@ -22,11 +22,15 @@ object Similarity {
   def cosine(a: String, b: String): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
+  /** `(idCol, e)`: the vector column as array<double>. */
+  private def vectors(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+    emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
+
   /** Exact top-k neighbors of one query vector: broadcast the query, scan
     * the corpus once (the ANN baseline — O(n·d), no shuffle except top-k). */
   def cosineTopK(emb: DataFrame, idCol: String, vecCol: String,
       queryId: Long, k: Int): DataFrame = {
-    val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
+    val e = vectors(emb, idCol, vecCol)
     val q = e.filter(col(idCol) === queryId).select(col("e").as("qe"))
     e.filter(col(idCol) =!= queryId)
       .crossJoin(broadcast(q))
@@ -42,40 +46,40 @@ object Similarity {
   private def planeWeights(p: Int, dims: Int): Seq[Double] =
     (0 until dims).map(d => ((p.toLong * 1000003L + d.toLong * 7919L) % 2001L - 1000L).toDouble)
 
-  /** Random-hyperplane LSH signature (`planes` bits) per vector — one
-    * codegen'd dot against each plane's literal weight vector. */
-  def lshSignature(emb: DataFrame, idCol: String, vecCol: String,
-      planes: Int, dims: Int): DataFrame = {
-    val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
-    val sig = (0 until planes).map { p =>
+  /** `planes`-bit random-hyperplane signature of vector column `e` over
+    * planes [offset, offset + planes) of the deterministic family — one
+    * codegen'd dot against each plane's literal weight vector. The single
+    * signature builder of [[lshSignature]] and [[lshBandedNearDupPairs]]. */
+  private def planeSignature(e: Column, offset: Int, planes: Int, dims: Int): Column = {
+    // bit p is `1L << p`, which wraps past 63
+    require(planes >= 1 && planes <= 63, s"LSH: planes=$planes must be in 1..63")
+    (0 until planes).map { p =>
       val d = graft.functions.VectorFunctions.array_dot(
-        col("e"), typedLit(planeWeights(p, dims)))
+        e, typedLit(planeWeights(offset + p, dims)))
       when(d > 0, lit(1L << p)).otherwise(0L)
     }.reduce(_ + _)
-    e.select(col(idCol), col("e"), sig.as("sig"))
   }
 
-  /** ANN candidate pairs via LSH buckets: all-pairs only within a bucket
-    * (shuffle on sig), each verified with the exact cosine.
-    *
-    * Ids-first: only `(sig, id)` rides the bucket shuffle — at 10^9 × 64d,
-    * shipping both embedding arrays through the candidate join would move
-    * two orders of magnitude more bytes than the 16-byte id rows; the
-    * vectors re-attach by id to the (much smaller) candidate set only. */
-  def lshNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
-      planes: Int, dims: Int, threshold: Double): DataFrame = {
-    val s = lshSignature(emb, idCol, vecCol, planes, dims)
-    val ids = s.select(col("sig"), col(idCol))
-    val l = ids.select(col("sig"), col(idCol).as("v1"))
-    val r = ids.select(col("sig"), col(idCol).as("v2"))
-    val cand = l.join(r, Seq("sig")).filter(col("v1") < col("v2")).select("v1", "v2")
-    val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
+  /** Random-hyperplane LSH signature (`planes` bits) per vector. */
+  def lshSignature(emb: DataFrame, idCol: String, vecCol: String,
+      planes: Int, dims: Int): DataFrame = {
+    val e = vectors(emb, idCol, vecCol)
+    e.select(col(idCol), col("e"), planeSignature(col("e"), 0, planes, dims).as("sig"))
+  }
+
+  /** The exact-cosine verify of every cosine pair generator: vectors
+    * re-attach by id to the `(v1, v2)` candidates and a pair survives at
+    * cosine ≥ `threshold` (rounded to 6 places). A null, empty or zero
+    * vector has no cosine and verifies with nothing; NaN is excluded
+    * explicitly, because Spark SQL orders it above every number. */
+  private def cosineVerified(cand: DataFrame, e: DataFrame, idCol: String,
+      threshold: Double): DataFrame = {
+    val v = e.filter(dot("e", "e") > 0)
     cand
-      .join(e.select(col(idCol).as("v1"), col("e").as("e1")), Seq("v1"))
-      .join(e.select(col(idCol).as("v2"), col("e").as("e2")), Seq("v2"))
-      .withColumn("cos", round(
-        dot("e1", "e2") / (sqrt(dot("e1", "e1")) * sqrt(dot("e2", "e2"))), 6))
-      .filter(col("cos") >= threshold)
+      .join(v.select(col(idCol).as("v1"), col("e").as("e1")), Seq("v1"))
+      .join(v.select(col(idCol).as("v2"), col("e").as("e2")), Seq("v2"))
+      .withColumn("cos", round(cosine("e1", "e2"), 6))
+      .filter(!isnan(col("cos")) && col("cos") >= threshold)
       .select("v1", "v2", "cos")
   }
 
@@ -97,7 +101,7 @@ object Similarity {
       fitSample: Long = 200000L): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
+    val e = vectors(emb, idCol, vecCol)
       .withColumn("features", array_to_vector(col("e")))
     // the quantizer only needs a representative sample — at 10^9 vectors
     // fitting on the full corpus would iterate the whole table 10×; a
@@ -129,74 +133,66 @@ object Similarity {
       .limit(k)
   }
 
-  /** Banded (amplified) LSH near-dup pairs — [[lshNearDupPairs]] with the
-    * standard AND-OR construction: `bands` independent `planes`-bit
-    * signatures per vector (band b uses plane indices [b·planes,
-    * (b+1)·planes) of the same deterministic family), candidates = pairs
-    * agreeing on ANY band's full signature, each verified once by exact
-    * cosine. One band of k planes catches a θ-angle pair with probability
-    * (1−θ/π)^k — at cos 0.95 and k=16 that is ~0.18, i.e. a single band
-    * MISSES most threshold-level pairs; B bands amplify to
-    * 1−(1−(1−θ/π)^k)^B (k=8, B=8 → ~0.99 at cos 0.95). Precision is owned
-    * by the exact-cosine verify, so extra candidates only cost compute.
-    * Ids-first like the single-band form: only (band, sig, id) rides the
-    * bucket shuffle; vectors re-attach to the deduplicated candidate set. */
+  /** Banded (amplified) LSH near-dup pairs — the standard AND-OR
+    * construction: `bands` independent `planes`-bit signatures per vector
+    * (band b uses plane indices [b·planes, (b+1)·planes) of the same
+    * deterministic family), candidates = pairs agreeing on ANY band's full
+    * signature, each verified once by exact cosine. One band of k planes
+    * catches a θ-angle pair with probability (1−θ/π)^k — at cos 0.95 and
+    * k=16 that is ~0.18, i.e. a single band MISSES most threshold-level
+    * pairs; B bands amplify to 1−(1−(1−θ/π)^k)^B (k=8, B=8 → ~0.99 at cos
+    * 0.95). `bands = 1` is plain single-band LSH. Precision is owned by the
+    * exact-cosine verify, so extra candidates only cost compute.
+    *
+    * Ids-first ([[Dedup.keyPairs]]): only (band, sig, id) rides the bucket
+    * shuffle; vectors re-attach to the deduplicated candidate set. Vectors
+    * that are null or not `dims` long can never verify and never enter a
+    * bucket — they would all share signature 0 in every band, one
+    * quadratic hot bucket. */
   def lshBandedNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
       planes: Int, bands: Int, dims: Int, threshold: Double): DataFrame = {
-    require(planes >= 1 && bands >= 1,
-      s"lshBandedNearDupPairs: planes=$planes bands=$bands must be >= 1")
-    val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
+    require(bands >= 1, s"lshBandedNearDupPairs: bands=$bands must be >= 1")
+    val e = vectors(emb, idCol, vecCol)
     // ONE scan of the input: all bands' signatures are computed in a
     // single projection (an array of (band, sig) structs, exploded) — a
     // union-of-per-band-selects would re-scan the relation `bands` times
-    val sigStructs = (0 until bands).map { b =>
-      val sig = (0 until planes).map { p =>
-        val d = graft.functions.VectorFunctions.array_dot(
-          col("e"), typedLit(planeWeights(b * planes + p, dims)))
-        when(d > 0, lit(1L << p)).otherwise(0L)
-      }.reduce(_ + _)
-      struct(lit(b).as("band"), sig.as("sig"))
-    }
-    val ids = e
-      .select(col(idCol), explode(array(sigStructs: _*)).as("bs"))
+    val sigs = (0 until bands).map(b =>
+      struct(lit(b).as("band"), planeSignature(col("e"), b * planes, planes, dims).as("sig")))
+    val buckets = e.filter(size(col("e")) === dims)
+      .select(col(idCol), explode(array(sigs: _*)).as("bs"))
       .select(col("bs.band").as("band"), col("bs.sig").as("sig"), col(idCol))
-    val l = ids.select(col("band"), col("sig"), col(idCol).as("v1"))
-    val r = ids.select(col("band"), col("sig"), col(idCol).as("v2"))
-    val cand = l.join(r, Seq("band", "sig")).filter(col("v1") < col("v2"))
-      .select("v1", "v2").distinct() // a pair may collide in several bands
-    cand
-      .join(e.select(col(idCol).as("v1"), col("e").as("e1")), Seq("v1"))
-      .join(e.select(col(idCol).as("v2"), col("e").as("e2")), Seq("v2"))
-      .withColumn("cos", round(
-        dot("e1", "e2") / (sqrt(dot("e1", "e1")) * sqrt(dot("e2", "e2"))), 6))
-      .filter(col("cos") >= threshold)
-      .select("v1", "v2", "cos")
+    val cand = Dedup.keyPairs(buckets, Seq("band", "sig"), idCol)
+      .select(col("d1").as("v1"), col("d2").as("v2"))
+      .distinct() // a pair may collide in several bands
+    cosineVerified(cand, e, idCol, threshold)
   }
 
+  /** Band count of [[semanticDedup]]: with 8 planes per band, 8 bands
+    * catch ~99% of cos-0.95 pairs (the image CLI's `--semantic` default). */
+  val SemanticBands: Int = 8
+
   /** SemDeDup-style semantic deduplication: embedding near-dup pairs
-    * (LSH-bucketed candidates verified by exact cosine) clustered into
-    * connected components, exactly one representative kept per cluster.
-    * Output `(idCol, component, is_kept)` over the whole corpus — the
-    * composition a training-data pipeline runs after embedding documents.
-    * The exact-pair variant ([[nearDupPairs]] edges) is the bounded
+    * (banded-LSH candidates, `planes` per band × [[SemanticBands]] bands,
+    * verified by exact cosine) clustered into connected components,
+    * exactly one representative kept per cluster. Output
+    * `(idCol, component, is_kept)` over the whole corpus — the composition
+    * a training-data pipeline runs after embedding documents. The
+    * exact-pair variant ([[nearDupPairs]] edges) is the bounded
     * verification baseline; this form scales because candidates come from
     * buckets, never all-pairs. */
   def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
       planes: Int, dims: Int, threshold: Double): DataFrame =
     graft.ops.Dedup.dedupComponents(emb, idCol,
-      lshNearDupPairs(emb, idCol, vecCol, planes, dims, threshold), "v1", "v2")
+      lshBandedNearDupPairs(emb, idCol, vecCol, planes, SemanticBands, dims, threshold),
+      "v1", "v2")
 
   /** Exact cosine near-dup pairs (bounded input — the verification
-    * baseline for [[lshNearDupPairs]]). */
+    * baseline for [[lshBandedNearDupPairs]]). */
   def nearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
-    val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
-    val l = e.select(col(idCol).as("v1"), col("e").as("e1"))
-    val r = e.select(col(idCol).as("v2"), col("e").as("e2"))
-    l.crossJoin(r).filter(col("v1") < col("v2"))
-      .withColumn("cos", round(
-        dot("e1", "e2") / (sqrt(dot("e1", "e1")) * sqrt(dot("e2", "e2"))), 6))
-      .filter(col("cos") >= threshold)
-      .select("v1", "v2", "cos")
+    val e = vectors(emb, idCol, vecCol)
+    val cand = e.select(col(idCol).as("v1")).crossJoin(e.select(col(idCol).as("v2")))
+      .filter(col("v1") < col("v2"))
+    cosineVerified(cand, e, idCol, threshold)
   }
 }

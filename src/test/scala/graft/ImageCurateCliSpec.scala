@@ -444,6 +444,27 @@ class ImageCurateCliSpec extends AnyFunSuite {
       .select("image_id").as[String].collect().toSet == Set("a-small"))
   }
 
+  test("--semantic input checks: planes outside 1..63 and mixed embedding widths fail loudly") {
+    def usage(args: String*): String =
+      intercept[CurateCli.CliUsageError](ImageCurateCli.run(spark, args.toArray)).getMessage
+    assert(usage("a", "b", "--semantic-planes", "64").contains("1..63"))
+    assert(usage("a", "b", "--semantic-planes", "0").contains("1..63"))
+    val cap = "a photo of a red barn"
+    val rows = Seq(("a", content(1)), ("b", content(3)), ("c", content(4)))
+      .map { case (id, bs) => (id, bs, 40, 30, "png", cap, ImageKernels.phash64(bs)) }
+      .toDF("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
+    val in = Files.createTempDirectory("imgsemw-in-").toString
+    rows.write.mode("overwrite").parquet(in)
+    // widths 8 and 4 (and one empty vector, which is unscorable, not a width)
+    val embDir = Files.createTempDirectory("imgsemw-emb-").toString
+    Seq(("a", Seq.fill(8)(1.0)), ("b", Seq.fill(4)(1.0)), ("c", Seq.empty[Double]))
+      .toDF("image_id", "image_emb").write.mode("overwrite").parquet(embDir)
+    val out = Files.createTempDirectory("imgsemw-out-").toString
+    val e = intercept[IllegalArgumentException](ImageCurateCli.run(spark, Array(in, out,
+      "--min-w", "16", "--min-h", "12", "--semantic", embDir)))
+    assert(e.getMessage.contains("mix widths 4, 8"), e.getMessage)
+  }
+
   test("--split: leakage-safe column keyed on the dedup-group label, md5-replayable, stable across runs") {
     val cap = "a photo of a red barn"
     val aBytes = content(1)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.TestSpark
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ANN operators over the driver testdata embeddings: the IVF scale path
@@ -12,6 +13,25 @@ class SimilaritySpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+
+  // planted near-dup corpus in the regime the semantic rung targets
+  // (cos ≥ ~0.95 — the testdata embeddings have no pairs above 0.5):
+  // 40 random base directions × 5 small perturbations each
+  private val dims = 32
+  private lazy val plantedRows: Seq[(Long, Seq[Double])] = {
+    val rnd = new scala.util.Random(2026L)
+    (0 until 40).flatMap { c =>
+      val base = Array.fill(dims)(rnd.nextGaussian())
+      (0 until 5).map { j =>
+        val v = base.map(_ + 0.05 * rnd.nextGaussian())
+        ((c * 5 + j).toLong, v.toSeq)
+      }
+    }
+  }
+  private lazy val planted = plantedRows.toDF("vec_id", "embedding")
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.select("v1", "v2").as[(Long, Long)].collect().toSet
 
   test("ivfTopK: probed-list ANN recalls most of the exact top-k") {
     val k = 10
@@ -28,8 +48,8 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("lshNearDupPairs agrees with exact pairs above the threshold (verified subset)") {
     val bounded = emb.filter($"vec_id" < 120)
-    val lsh = Similarity.lshNearDupPairs(bounded, "vec_id", "embedding",
-      planes = 4, dims = 64, threshold = 0.3)
+    val lsh = Similarity.lshBandedNearDupPairs(bounded, "vec_id", "embedding",
+      planes = 4, bands = 1, dims = 64, threshold = 0.3)
       .select("v1", "v2").as[(Long, Long)].collect().toSet
     val exact = Similarity.nearDupPairs(bounded, "vec_id", "embedding", threshold = 0.3)
       .select("v1", "v2").as[(Long, Long)].collect().toSet
@@ -42,24 +62,11 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("lshBandedNearDupPairs: amplification recovers high-cosine pairs single-band LSH misses; still a verified subset") {
-    // planted near-dup corpus in the regime the semantic rung targets
-    // (cos ≥ ~0.95 — the testdata embeddings have no pairs above 0.5):
-    // 40 random base directions × 5 small perturbations each
-    val rnd = new scala.util.Random(2026L)
-    val dims = 32
-    val rows = (0 until 40).flatMap { c =>
-      val base = Array.fill(dims)(rnd.nextGaussian())
-      (0 until 5).map { j =>
-        val v = base.map(_ + 0.05 * rnd.nextGaussian())
-        ((c * 5 + j).toLong, v.toSeq)
-      }
-    }
-    val planted = rows.toDF("vec_id", "embedding")
     val exact = Similarity.nearDupPairs(planted, "vec_id", "embedding", 0.95)
       .select("v1", "v2").as[(Long, Long)].collect().toSet
     assert(exact.size >= 100, s"fixture premise: planted pairs, got ${exact.size}")
-    val single = Similarity.lshNearDupPairs(planted, "vec_id", "embedding",
-      planes = 8, dims = dims, threshold = 0.95)
+    val single = Similarity.lshBandedNearDupPairs(planted, "vec_id", "embedding",
+      planes = 8, bands = 1, dims = dims, threshold = 0.95)
       .select("v1", "v2").as[(Long, Long)].collect().toSet
     val banded = Similarity.lshBandedNearDupPairs(planted, "vec_id",
       "embedding", planes = 8, bands = 8, dims = dims, threshold = 0.95)
@@ -101,5 +108,69 @@ class SimilaritySpec extends AnyFunSuite {
       if (id != c) assert(exactComp.getOrElse(id, id) == exactComp.getOrElse(c, c),
         s"semanticDedup merged $id into $c but exact components disagree")
     }
+  }
+
+  test("semanticDedup: banded candidates recover >= 90% of the exact cos-0.95 components") {
+    val exactComp = Dedup.connectedComponents(
+        Similarity.nearDupPairs(planted, "vec_id", "embedding", 0.95)
+          .select(col("v1").as("d1"), col("v2").as("d2")))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val members = exactComp.groupBy(_._2).map { case (c, m) => c -> m.keySet }
+    assert(members.size >= 30, s"fixture premise: planted clusters, got ${members.size}")
+    val got = Similarity.semanticDedup(planted, "vec_id", "embedding",
+        planes = 8, dims = dims, threshold = 0.95)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val semMembers = got.groupBy(_._2).map { case (c, m) => c -> m.keySet }
+    // a component is recovered when semanticDedup groups exactly its members
+    val recovered = members.count { case (c, m) => semMembers.get(c).contains(m) }
+    assert(recovered >= 0.9 * members.size, s"recovered $recovered of ${members.size}")
+  }
+
+  test("empty and zero vectors verify with nothing: no NaN or divide-by-zero pairs") {
+    // a NaN element makes every cosine NaN, which Spark orders above 0.95
+    val rows = plantedRows.take(10) ++ Seq(
+      (1000L, Seq.empty[Double]), (1001L, Seq.empty[Double]),
+      (1002L, Seq.fill(dims)(0.0)), (1003L, Seq.fill(dims)(0.0)),
+      (1004L, Seq.fill(dims)(Double.NaN)), (1005L, Seq.fill(dims)(Double.NaN)))
+    val df = rows.toDF("vec_id", "embedding")
+    val exact = pairSet(Similarity.nearDupPairs(df, "vec_id", "embedding", 0.95))
+    val banded = pairSet(Similarity.lshBandedNearDupPairs(df, "vec_id", "embedding",
+      planes = 8, bands = 8, dims = dims, threshold = 0.95))
+    val clean = pairSet(Similarity.nearDupPairs(plantedRows.take(10).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", 0.95))
+    assert(clean.nonEmpty, "fixture premise: planted pairs among the first 10 rows")
+    assert(exact == clean, s"exact=$exact")
+    assert(banded.subsetOf(clean) && banded.forall(p => p._2 < 1000L), s"banded=$banded")
+  }
+
+  test("null embeddings never enter the LSH bucket join (no quadratic bucket 0)") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Plans extends AdaptiveSparkPlanHelper
+    // rows out of the (band, sig) bucket join, read from the executed plan
+    def bucketJoinRows(df: org.apache.spark.sql.DataFrame): Long = {
+      df.collect()
+      val joins = Plans.collect(df.queryExecution.executedPlan) {
+        case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "band")) => j
+      }
+      assert(joins.nonEmpty, df.queryExecution.executedPlan.toString)
+      joins.map(_.metrics("numOutputRows").value).sum
+    }
+    def banded(df: org.apache.spark.sql.DataFrame) = Similarity.lshBandedNearDupPairs(
+      df, "vec_id", "embedding", planes = 8, bands = 8, dims = dims, threshold = 0.95)
+    val nulls = (0L until 2000L).map(i => (10000L + i, null: Seq[Double]))
+    val withNulls = (plantedRows ++ nulls).toDF("vec_id", "embedding")
+    assert(pairSet(banded(withNulls)) == pairSet(banded(planted)))
+    val clean = bucketJoinRows(banded(planted))
+    val dirty = bucketJoinRows(banded(withNulls))
+    assert(clean > 0 && dirty <= 2 * clean, s"bucket join rows: clean=$clean with nulls=$dirty")
+  }
+
+  test("LSH planes outside 1..63 are rejected (bit 1L << 64 wraps)") {
+    assert(intercept[IllegalArgumentException](Similarity.lshSignature(planted,
+      "vec_id", "embedding", planes = 64, dims = dims)).getMessage.contains("1..63"))
+    assert(intercept[IllegalArgumentException](Similarity.lshBandedNearDupPairs(planted,
+      "vec_id", "embedding", planes = 0, bands = 8, dims = dims, threshold = 0.95))
+      .getMessage.contains("1..63"))
   }
 }
